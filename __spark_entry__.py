@@ -577,7 +577,7 @@ def q_nodequery_has(spark, sf_dir):
     # at-subject branch produces these matches (a global-index compile
     # would count 0), and the count equals n_has
     lt_cnt = _cnt("div.b:has(div:not(:lt(99)) p)", "n_lt")
-    return (
+    counts = (
         has_cnt.join(nested, "doc_id", "left").join(sib, "doc_id", "left")
         .join(has_or, "doc_id", "left").join(rooted, "doc_id", "left")
         .join(lt_cnt, "doc_id", "left")
@@ -593,6 +593,11 @@ def q_nodequery_has(spark, sf_dir):
             F.coalesce(F.col("n_lt"), F.lit(0)).cast("int").alias("n_lt"),
         )
     )
+    # the per-doc counts are small: collect them, then release the cached
+    # node table so it does not hold executor storage for later queries
+    rows = counts.collect()
+    nodes.unpersist()
+    return spark.createDataFrame(rows, counts.schema)
 
 
 def q_nodequery_contains(spark, sf_dir):

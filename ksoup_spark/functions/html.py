@@ -7,17 +7,26 @@ Arrow batches — the Spark analogue of Element.select/text/attr
 (/root/reference/ksoup/src/com/fleeksoft/ksoup/nodes/Element.kt:459-499,
 Ksoup.kt:192-288 for metadata).
 
+Each function is a per-document body handed to ``_doc_udf``, the pandas_udf
+form of the engine's one per-document harness (the mapInArrow form is
+operators.extract._map_docs), together with how a cell becomes a document:
+treebuilder.parse, parse_xml, or the raw string. The harness owns the batch
+loop and the null-is-empty rule.
+
 These are the convenience path; the bulk pipeline uses
 operators.extract (mapInArrow) which avoids pandas Series overhead.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    DataType,
     IntegerType,
     StringType,
     StructField,
@@ -30,34 +39,45 @@ from ..kernel import serialize
 from ..kernel import textops as tx
 from ..kernel.treebuilder import parse as _parse
 from ..kernel.xml import parse_xml as _parse_xml
+from ..operators.extract import SPANS_TYPE, spans_to_rows
+
+
+def _doc_udf(return_type: DataType, per_doc, parse):
+    """pandas_udf form: a document column -> a column of per_doc results.
+
+    parse turns each cell into the document per_doc reads: treebuilder.parse
+    (a functools.partial carries track_errors/track_positions), parse_xml,
+    or None to pass the raw string. A null cell is the empty document "".
+    A StructType result comes back as a pandas DataFrame of per_doc dicts."""
+    struct = isinstance(return_type, StructType)
+
+    @F.pandas_udf(return_type)
+    def _f(s: pd.Series) -> pd.Series:
+        docs = ("" if h is None else h for h in s)
+        out = [per_doc(d) for d in (map(parse, docs) if parse else docs)]
+        return pd.DataFrame(out) if struct else pd.Series(out)
+
+    return _f
+
+
+_STRINGS = ArrayType(StringType())
+_INTS = ArrayType(IntegerType())
+
+
+def _body(d) -> int:
+    b = d.body()
+    return b if b != -1 else 0
 
 
 def html_text(col: Column | str) -> Column:
     """Element.text() of the document body."""
-
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            b = d.body()
-            out.append(tx.element_text(d, b if b != -1 else 0))
-        return pd.Series(out)
-
-    return _f(col)
+    return _doc_udf(StringType(), lambda d: tx.element_text(d, _body(d)),
+                    _parse)(col)
 
 
 def html_whole_text(col: Column | str) -> Column:
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            b = d.body()
-            out.append(tx.whole_text(d, b if b != -1 else 0))
-        return pd.Series(out)
-
-    return _f(col)
+    return _doc_udf(StringType(), lambda d: tx.whole_text(d, _body(d)),
+                    _parse)(col)
 
 
 def html_title(col: Column | str) -> Column:
@@ -66,59 +86,22 @@ def html_title(col: Column | str) -> Column:
     not pay for parsing their bodies (StreamParser.kt:45 semantics)."""
     from ..kernel.stream_parser import stream_title
 
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([stream_title(h or "") for h in s])
-
-    return _f(col)
+    return _doc_udf(StringType(), stream_title, None)(col)
 
 
 def html_select_text(col: Column | str, css: str) -> Column:
     """texts of elements matching the CSS query, in document order."""
-    ev = sel.parse_query(css)  # validate on driver
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            out.append([tx.element_text(d, n) for n in sel.select(d, q)])
-        return pd.Series(out)
-
-    return _f(col)
+    sel.parse_query(css)  # validate on driver
+    return _doc_udf(_STRINGS, lambda d: [
+        tx.element_text(d, n) for n in sel.select(d, css)], _parse)(col)
 
 
 def html_css_selector(col: Column | str, css: str) -> Column:
     """unique CSS paths (Element.cssSelector, nodes/Element.kt:836-858) of
     the elements matching the query, in document order."""
     sel.parse_query(css)  # validate on driver
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            out.append(sel.css_selectors(d, sel.select(d, q)))
-        return pd.Series(out)
-
-    return _f(col)
-
-
-def html_select_own_text(col: Column | str, css: str) -> Column:
-    sel.parse_query(css)
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            out.append([tx.own_text(d, n) for n in sel.select(d, q)])
-        return pd.Series(out)
-
-    return _f(col)
+    return _doc_udf(_STRINGS, lambda d: sel.css_selectors(d, sel.select(d, css)),
+                    _parse)(col)
 
 
 def html_select_attr(col: Column | str, css: str, attr: str,
@@ -129,52 +112,22 @@ def html_select_attr(col: Column | str, css: str, attr: str,
     returns "" there)."""
     sel.parse_query(css)
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            vals = []
-            for n in sel.select(d, q):
-                v = d.get_attr(n, attr)
-                if absolute and v:
-                    v = d.abs_url(n, attr) or v
-                if v is not None:
-                    vals.append(v)
-            out.append(vals)
-        return pd.Series(out)
+    def values(d):
+        vals = []
+        for n in sel.select(d, css):
+            v = d.get_attr(n, attr)
+            if absolute and v:
+                v = d.abs_url(n, attr) or v
+            if v is not None:
+                vals.append(v)
+        return vals
 
-    return _f(col)
+    return _doc_udf(_STRINGS, values, _parse)(col)
 
 
 def html_select_count(col: Column | str, css: str) -> Column:
     sel.parse_query(css)
-
-    @F.pandas_udf(IntegerType())
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        return pd.Series([len(sel.select(_parse(h or ""), q)) for h in s])
-
-    return _f(col)
-
-
-def html_select_html(col: Column | str, css: str) -> Column:
-    """outerHtml of matching elements."""
-    sel.parse_query(css)
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            out.append(
-                [serialize.outer_html(d, n, pretty=False) for n in sel.select(d, q)]
-            )
-        return pd.Series(out)
-
-    return _f(col)
+    return _doc_udf(IntegerType(), lambda d: len(sel.select(d, css)), _parse)(col)
 
 
 _META_SCHEMA = StructType(
@@ -220,66 +173,49 @@ def html_meta(col: Column | str, base_uri: str = "") -> Column:
             href = base_uri + href
         return href
 
-    @F.pandas_udf(_META_SCHEMA)
-    def _f(s: pd.Series) -> pd.DataFrame:
-        rows = []
-        for h in s:
-            d = _parse(h or "")
+    def row(d):
+        def meta(attr_val, key="name", content="content"):
+            n = sel.select_first(d, f'meta[{key}={attr_val}]')
+            return d.get_attr(n, content) if n != -1 else None
 
-            def meta(attr_val, key="name", content="content"):
-                n = sel.select_first(d, f'meta[{key}={attr_val}]')
-                return d.get_attr(n, content) if n != -1 else None
+        canonical = None
+        n = sel.select_first(d, 'link[rel=canonical]')
+        if n != -1:
+            canonical = d.get_attr(n, "href")
+        charset = None
+        n = sel.select_first(d, "meta[charset]")
+        if n != -1:
+            charset = d.get_attr(n, "charset")
+        return {
+            "title": tx.doc_title(d) or None,
+            "meta_title": meta("title"),
+            "description": meta("description"),
+            "author": meta("author"),
+            "og_title": meta("og:title", key="property"),
+            "og_site_name": meta("og:site_name", key="property"),
+            "og_type": meta("og:type", key="property"),
+            "og_locale": meta("og:locale", key="property"),
+            "og_description": meta("og:description", key="property"),
+            "og_image": meta("og:image", key="property"),
+            "og_url": meta("og:url", key="property"),
+            "twitter_card": meta("twitter:card"),
+            "twitter_title": meta("twitter:title"),
+            "twitter_description": meta("twitter:description"),
+            "twitter_image": meta("twitter:image"),
+            "canonical": canonical,
+            "favicon": _icon(d, "link[rel~=icon]"),
+            "shortcut_icon": _icon(d, "link[rel~=shortcut icon]"),
+            "charset": charset,
+        }
 
-            canonical = None
-            n = sel.select_first(d, 'link[rel=canonical]')
-            if n != -1:
-                canonical = d.get_attr(n, "href")
-            charset = None
-            n = sel.select_first(d, "meta[charset]")
-            if n != -1:
-                charset = d.get_attr(n, "charset")
-            rows.append(
-                {
-                    "title": tx.doc_title(d) or None,
-                    "meta_title": meta("title"),
-                    "description": meta("description"),
-                    "author": meta("author"),
-                    "og_title": meta("og:title", key="property"),
-                    "og_site_name": meta("og:site_name", key="property"),
-                    "og_type": meta("og:type", key="property"),
-                    "og_locale": meta("og:locale", key="property"),
-                    "og_description": meta("og:description", key="property"),
-                    "og_image": meta("og:image", key="property"),
-                    "og_url": meta("og:url", key="property"),
-                    "twitter_card": meta("twitter:card"),
-                    "twitter_title": meta("twitter:title"),
-                    "twitter_description": meta("twitter:description"),
-                    "twitter_image": meta("twitter:image"),
-                    "canonical": canonical,
-                    "favicon": _icon(d, "link[rel~=icon]"),
-                    "shortcut_icon": _icon(d, "link[rel~=shortcut icon]"),
-                    "charset": charset,
-                }
-            )
-        return pd.DataFrame(rows)
-
-    return _f(col)
+    return _doc_udf(_META_SCHEMA, row, _parse)(col)
 
 
 def xml_select_text(col: Column | str, css: str) -> Column:
     """XML-mode parse + select (Parser.xmlParser path)."""
     sel.parse_query(css)
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for x in s:
-            d = _parse_xml(x or "")
-            out.append([tx.element_text(d, n) for n in sel.select(d, q)])
-        return pd.Series(out)
-
-    return _f(col)
+    return _doc_udf(_STRINGS, lambda d: [
+        tx.element_text(d, n) for n in sel.select(d, css)], _parse_xml)(col)
 
 
 def html_links(col: Column | str, absolute: bool = True) -> Column:
@@ -290,22 +226,18 @@ def html_links(col: Column | str, absolute: bool = True) -> Column:
 def html_media_refs(col: Column | str) -> Column:
     """All media references: img[src], video[src]/source[src], object[data]."""
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query("img[src], video[src], video > source[src], object[data]")
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            vals = []
-            for n in sel.select(d, q):
-                attr = "data" if d.tag[n] == "object" else "src"
-                v = d.abs_url(n, attr) or d.get_attr(n, attr)
-                if v:
-                    vals.append(v)
-            out.append(vals)
-        return pd.Series(out)
+    css = "img[src], video[src], video > source[src], object[data]"
 
-    return _f(col)
+    def refs(d):
+        vals = []
+        for n in sel.select(d, css):
+            attr = "data" if d.tag[n] == "object" else "src"
+            v = d.abs_url(n, attr) or d.get_attr(n, attr)
+            if v:
+                vals.append(v)
+        return vals
+
+    return _doc_udf(_STRINGS, refs, _parse)(col)
 
 
 def html_clean(col: Column | str, preset: str = "basic") -> Column:
@@ -314,25 +246,8 @@ def html_clean(col: Column | str, preset: str = "basic") -> Column:
 
     assert preset in ("none", "simple_text", "basic", "basic_with_images",
                       "relaxed")
-
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        sl = getattr(Safelist, preset)()
-        return pd.Series([clean_html(h or "", sl) for h in s])
-
-    return _f(col)
-
-
-def html_is_valid(col: Column | str, preset: str = "basic") -> Column:
-    from ..kernel.safety import Safelist, is_valid_html
-    from pyspark.sql.types import BooleanType
-
-    @F.pandas_udf(BooleanType())
-    def _f(s: pd.Series) -> pd.Series:
-        sl = getattr(Safelist, preset)()
-        return pd.Series([is_valid_html(h or "", sl) for h in s])
-
-    return _f(col)
+    safelist = getattr(Safelist, preset)()
+    return _doc_udf(StringType(), lambda h: clean_html(h, safelist), None)(col)
 
 
 def html_main_text(col: Column | str, base_uri: str = "") -> Column:
@@ -340,19 +255,7 @@ def html_main_text(col: Column | str, base_uri: str = "") -> Column:
     strip chrome, pick the semantic/best-scored container, Element.text())."""
     from ..kernel.boilerplate import main_text
 
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([main_text(h or "", base_uri) for h in s])
-
-    return _f(col)
-
-
-_SPAN_SCHEMA = ArrayType(StructType([
-    StructField("kind", StringType()),
-    StructField("text", StringType()),
-    StructField("media_ref", StringType()),
-    StructField("offset", IntegerType()),
-]))
+    return _doc_udf(StringType(), lambda h: main_text(h, base_uri), None)(col)
 
 
 def html_main_spans(col: Column | str, base_uri: str = "") -> Column:
@@ -360,34 +263,18 @@ def html_main_spans(col: Column | str, base_uri: str = "") -> Column:
     the main container — media spans interleaved at their DOM positions."""
     from ..kernel.boilerplate import main_spans
 
-    @F.pandas_udf(_SPAN_SCHEMA)
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for h in s:
-            out.append([
-                {"kind": k, "text": t, "media_ref": m, "offset": o}
-                for k, t, m, o in main_spans(h or "", base_uri)
-            ])
-        return pd.Series(out)
-
-    return _f(col)
+    return _doc_udf(SPANS_TYPE, lambda h: spans_to_rows(main_spans(h, base_uri)),
+                    None)(col)
 
 
 def _rewrite_udf(fn):
     """html-in → html-out rewrite wrapper (serializes body inner HTML)."""
 
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            fn(d)
-            b = d.body()
-            out.append(serialize.inner_html(d, b if b != -1 else 0,
-                                            pretty=False))
-        return pd.Series(out)
+    def rewrite(d):
+        fn(d)
+        return serialize.inner_html(d, _body(d), pretty=False)
 
-    return _f
+    return _doc_udf(StringType(), rewrite, _parse)
 
 
 def html_remove(col: Column | str, css: str) -> Column:
@@ -413,73 +300,13 @@ def html_set_attr(col: Column | str, css: str, key: str, value: str) -> Column:
     return _rewrite_udf(op)(col)
 
 
-def html_wrap(col: Column | str, css: str, wrapper_html: str) -> Column:
-    """Wrap matching elements in the fragment (Elements.wrap)."""
-    sel.parse_query(css)
-    from ..kernel import mutate
-
-    def op(d):
-        mutate.bulk_wrap(d, sel.select(d, css), wrapper_html)
-
-    return _rewrite_udf(op)(col)
-
-
-def html_unwrap(col: Column | str, css: str) -> Column:
-    """Drop matching elements but keep their children (Elements.unwrap)."""
-    sel.parse_query(css)
-    from ..kernel import mutate
-
-    def op(d):
-        mutate.bulk_unwrap(d, sel.select(d, css))
-
-    return _rewrite_udf(op)(col)
-
-
 def html_parse_errors(col: Column | str, max_errors: int = 100) -> Column:
     """Formatted parse errors per document ("<line:col>: message"), up to
     max_errors (Parser.setTrackErrors / ParseErrorList semantics,
     /root/reference/ksoup/src/com/fleeksoft/ksoup/parser/Parser.kt:92-107).
     The crawl-hygiene column: filter/inspect malformed documents at scale."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([
-            _parse(h or "", track_errors=max_errors).parse_errors for h in s
-        ])
-
-    return _f(col)
-
-
-def html_parse_error_count(col: Column | str, max_errors: int = 10000) -> Column:
-    """Number of parse errors per document (bounded by max_errors)."""
-
-    @F.pandas_udf(IntegerType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([
-            len(_parse(h or "", track_errors=max_errors).parse_errors)
-            for h in s
-        ])
-
-    return _f(col)
-
-
-def html_src_positions(col: Column | str, css: str) -> Column:
-    """Source start offsets of elements matching the CSS query, in document
-    order (Parser.setTrackPosition start semantics,
-    /root/reference/ksoup/src/com/fleeksoft/ksoup/parser/TreeBuilder.kt:295-333)
-    — the span -> source provenance column for training-data pipelines."""
-    sel.parse_query(css)
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "", track_positions=True)
-            out.append([d.src_pos.get(n, -1) for n in sel.select(d, q)])
-        return pd.Series(out)
-
-    return _f(col)
+    return _doc_udf(_STRINGS, lambda d: d.parse_errors,
+                    partial(_parse, track_errors=max_errors))(col)
 
 
 def html_src_ranges(col: Column | str, css: str) -> Column:
@@ -490,23 +317,16 @@ def html_src_ranges(col: Column | str, css: str) -> Column:
     match. Scalar-extractable with element_at for oracle checking."""
     sel.parse_query(css)
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "", track_positions=True)
-            m = sel.select_first(d, q)
-            if m is None or m < 0:
-                out.append([])
-                continue
-            r = dom.source_range(d, m) or (-1, -1)
-            e = dom.end_source_range(d, m) or (-1, -1)
-            ln, c = dom.line_col(d, r[0])
-            out.append([r[0], r[1], e[0], e[1], ln, c])
-        return pd.Series(out)
+    def ranges(d):
+        m = sel.select_first(d, css)
+        if m is None or m < 0:
+            return []
+        r = dom.source_range(d, m) or (-1, -1)
+        e = dom.end_source_range(d, m) or (-1, -1)
+        ln, c = dom.line_col(d, r[0])
+        return [r[0], r[1], e[0], e[1], ln, c]
 
-    return _f(col)
+    return _doc_udf(_INTS, ranges, partial(_parse, track_positions=True))(col)
 
 
 def html_attr_src_range(col: Column | str, css: str, attr: str) -> Column:
@@ -515,18 +335,12 @@ def html_attr_src_range(col: Column | str, css: str, attr: str) -> Column:
     empty array when no match / untracked attribute."""
     sel.parse_query(css)
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "", track_positions=True)
-            m = sel.select_first(d, q)
-            ar = None if m is None or m < 0 else dom.attr_source_range(d, m, attr)
-            out.append(list(ar) if ar else [])
-        return pd.Series(out)
+    def attr_range(d):
+        m = sel.select_first(d, css)
+        ar = None if m is None or m < 0 else dom.attr_source_range(d, m, attr)
+        return list(ar) if ar else []
 
-    return _f(col)
+    return _doc_udf(_INTS, attr_range, partial(_parse, track_positions=True))(col)
 
 
 def html_form_controls(col: Column | str) -> Column:
@@ -535,18 +349,11 @@ def html_form_controls(col: Column | str) -> Column:
     submittable descendants unioned with parse-time linked controls (the
     foster-parented / early-close cases), in association order."""
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            rows = []
-            forms = [n for n, _ in d.preorder(0)
-                     if d.kind[n] == dom.ELEMENT and d.tag[n] == "form"]
-            for fi, form in enumerate(forms):
-                for c in dom.form_elements(d, form):
-                    rows.append(f"{fi}:{d.tag[c]}:{d.get_attr(c, 'id') or ''}")
-            out.append(rows)
-        return pd.Series(out)
+    def controls(d):
+        forms = [n for n, _ in d.preorder(0)
+                 if d.kind[n] == dom.ELEMENT and d.tag[n] == "form"]
+        return [f"{fi}:{d.tag[c]}:{d.get_attr(c, 'id') or ''}"
+                for fi, form in enumerate(forms)
+                for c in dom.form_elements(d, form)]
 
-    return _f(col)
+    return _doc_udf(_STRINGS, controls, _parse)(col)

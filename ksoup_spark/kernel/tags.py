@@ -65,18 +65,6 @@ def is_block(name: str) -> bool:
     return name in BLOCK_TAGS
 
 
-def is_void(name: str) -> bool:
-    return name in VOID_TAGS
-
-
-def is_inline(name: str) -> bool:
-    return name not in BLOCK_TAGS
-
-
-def preserves_whitespace(name: str) -> bool:
-    return name in PRESERVE_WS_TAGS
-
-
 def format_as_block(name: str) -> bool:
     # Element.text() tail rule uses tag.formatAsBlock (Element.kt:1339-1349):
     # block tags that are NOT in the format-as-inline list.

@@ -10,6 +10,22 @@ per-document parse loop runs inside the batch (the same document-at-a-time
 model as the reference, Parser.kt:13-14 — parallelism lives BETWEEN
 documents).
 
+Every per-document loop of the engine runs in one harness, which wraps the
+batch boundary around a per-document function. It has two forms:
+
+- ``_map_docs`` here (mapInArrow form; the span operators and
+  select_elements_df): each input column of a record batch is decoded once
+  with ``to_pylist``, the per-document function runs per row, and its
+  results are encoded once with ``pa.array``; doc_id passes through as
+  Arrow.
+- ``functions.html._doc_udf`` (pandas_udf form; the column API and the
+  streaming span column): each cell is parsed (treebuilder.parse,
+  parse_xml, or kept as the raw string) and handed to the per-document
+  function. It lives with the column API so that the span kernels'
+  workers never load pandas.
+
+node_table_df keeps its own columnar build (many rows per document).
+
 At 100 TB scale: extraction is embarrassingly parallel (no shuffle needed
 beyond the optional salting pass), the parse kernel is CPU-bound per core,
 and Arrow batch size is bounded by spark.sql.execution.arrow.maxRecordsPerBatch
@@ -23,6 +39,7 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -33,6 +50,8 @@ from pyspark.sql.types import (
 )
 
 from ..kernel import dom
+from ..kernel import textops as tx
+from ..kernel.charset import decode_html_bytes
 from ..kernel.textops import extract_spans as _kernel_extract_spans
 from ..kernel.treebuilder import parse as _parse
 
@@ -76,6 +95,36 @@ NODE_TABLE_TEXT_SCHEMA = StructType(
 _MEDIA_TAG = {"image": "img", "video": "video", "object": "object"}
 
 
+# -- the per-document harness ------------------------------------------------
+
+def _map_docs(docs: DataFrame, per_doc, schema: StructType) -> DataFrame:
+    """mapInArrow form: (doc_id, *inputs) -> (doc_id, schema[1]).
+
+    per_doc(*inputs) runs once per document on the decoded Python values
+    (None for a null cell, which it treats as an empty document); the
+    output column's Arrow type is built once, from the Spark schema."""
+    arrow_type = to_arrow_type(schema[1].dataType)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cols = [c.to_pylist() for c in batch.columns[1:]]
+            out = [per_doc(*doc) for doc in zip(*cols)]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.array(out, type=arrow_type)],
+                names=schema.names,
+            )
+
+    return docs.mapInArrow(kernel, schema)
+
+
+def _docs_in(docs: DataFrame, id_col: str, **cols: str) -> DataFrame:
+    """(doc_id as string, *renamed input columns) for a harness kernel."""
+    return docs.select(F.col(id_col).cast("string").alias("doc_id"),
+                       *(F.col(c).alias(name) for name, c in cols.items()))
+
+
+# -- span extraction ---------------------------------------------------------
+
 def assemble_html(spans: list) -> str:
     """Interleaved input spans -> one HTML payload.
 
@@ -113,6 +162,19 @@ def extract_spans_from_html(html: str, base_uri: str = "") -> list[dict]:
     return spans_to_rows(_kernel_extract_spans(_parse(html, base_uri)))
 
 
+def _spans_of_input(spans: list | None) -> list[dict]:
+    return extract_spans_from_html(assemble_html(spans or []))
+
+
+def _spans_of_html(html: str | None) -> list[dict]:
+    return extract_spans_from_html(html or "")
+
+
+def _spans_of_bytes(content: bytes | None, charset: str | None = None) -> list[dict]:
+    return extract_spans_from_html(
+        decode_html_bytes(content, charset) if content is not None else "")
+
+
 def salted_repartition(df: DataFrame, num_partitions: int | None = None,
                        id_col: str = "doc_id") -> DataFrame:
     """Scatter rows uniformly by hash(doc_id) so giant documents spread
@@ -127,63 +189,17 @@ def extract_spans_df(docs: DataFrame, repartition: int | None = None) -> DataFra
     docs = docs.select("doc_id", "spans")
     if repartition:
         docs = salted_repartition(docs, repartition)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        arrow_spans_type = pa.list_(
-            pa.struct(
-                [
-                    ("kind", pa.string()),
-                    ("text", pa.string()),
-                    ("media_ref", pa.string()),
-                    ("offset", pa.int32()),
-                ]
-            )
-        )
-        for batch in batches:
-            ids = batch.column(0)
-            in_spans = batch.column(1).to_pylist()
-            out = [
-                extract_spans_from_html(assemble_html(s or []))
-                for s in in_spans
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(out, type=arrow_spans_type)],
-                names=["doc_id", "spans"],
-            )
-
-    return docs.mapInArrow(kernel, SPANS_SCHEMA)
+    return _map_docs(docs, _spans_of_input, SPANS_SCHEMA)
 
 
 def extract_spans_from_html_df(docs: DataFrame, html_col: str = "html",
                                id_col: str = "doc_id",
                                repartition: int | None = None) -> DataFrame:
     """(doc_id, html) -> (doc_id, spans)."""
-    docs = docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(html_col).alias("html"))
+    docs = _docs_in(docs, id_col, html=html_col)
     if repartition:
         docs = salted_repartition(docs, repartition)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        arrow_spans_type = pa.list_(
-            pa.struct(
-                [
-                    ("kind", pa.string()),
-                    ("text", pa.string()),
-                    ("media_ref", pa.string()),
-                    ("offset", pa.int32()),
-                ]
-            )
-        )
-        for batch in batches:
-            ids = batch.column(0)
-            htmls = batch.column(1).to_pylist()
-            out = [extract_spans_from_html(h or "") for h in htmls]
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(out, type=arrow_spans_type)],
-                names=["doc_id", "spans"],
-            )
-
-    return docs.mapInArrow(kernel, SPANS_SCHEMA)
+    return _map_docs(docs, _spans_of_html, SPANS_SCHEMA)
 
 
 _TEXT_COLUMN_NAMES = {"text": "elem_text", "own": "elem_own_text",
@@ -216,9 +232,13 @@ def node_table_df(docs: DataFrame, html_col: str = "html",
     and adds a 0/1 ``pseudo`` column, so nodequery compiles :matchText as a
     plain column predicate. Opt-in because the rewrite changes tree shape
     for EVERY selector evaluated over the table — exactly the reference's
-    own semantics, where a :matchText query mutates the document."""
-    docs = docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(html_col).alias("html"))
+    own semantics, where a :matchText query mutates the document.
+
+    The columns are built per batch straight from each document's
+    to_table() columns rather than through the per-document harness."""
+    from ..kernel.selector import prepare_match_text
+
+    docs = _docs_in(docs, id_col, html=html_col)
     tcols = tuple(dict.fromkeys(
         (("text",) if include_elem_text else ()) + tuple(text_columns)))
     text_names = tuple(_TEXT_COLUMN_NAMES[k] for k in tcols)
@@ -226,52 +246,27 @@ def node_table_df(docs: DataFrame, html_col: str = "html",
     if match_text:
         extra_fields.append(StructField("pseudo", IntegerType()))
     schema = StructType(NODE_TABLE_SCHEMA.fields + extra_fields)
-    copy_keys = ("node_id", "parent_id", "depth", "kind", "tag",
-                 "ns", "sibling_index", "elem_sibling_index",
-                 "first_child", "next_sibling", "subtree_end", "text")
-    copy_keys = copy_keys + text_names
-    if match_text:
-        copy_keys = copy_keys + ("pseudo",)
+    arrow_types = [to_arrow_type(f.dataType) for f in schema.fields]
+    copy_keys = schema.names[1:]
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..kernel.selector import prepare_match_text
         for batch in batches:
             ids = batch.column(0).to_pylist()
             htmls = batch.column(1).to_pylist()
-            cols: dict[str, list] = {f.name: [] for f in schema.fields}
+            cols: dict[str, list] = {name: [] for name in schema.names}
             for did, h in zip(ids, htmls):
                 doc = _parse(h or "")
                 if match_text:
                     prepare_match_text(doc)
                 t = doc.to_table(text_columns=tcols,
                                  include_pseudo=match_text)
-                n = len(t["node_id"])
-                cols["doc_id"].extend([did] * n)
+                cols["doc_id"].extend([did] * len(t["node_id"]))
                 for key in copy_keys:
                     cols[key].extend(t[key])
-                cols["attrs"].extend(t["attrs"])
-            arrays = [
-                pa.array(cols["doc_id"], type=pa.string()),
-                pa.array(cols["node_id"], type=pa.int32()),
-                pa.array(cols["parent_id"], type=pa.int32()),
-                pa.array(cols["depth"], type=pa.int32()),
-                pa.array(cols["kind"], type=pa.int32()),
-                pa.array(cols["tag"], type=pa.string()),
-                pa.array(cols["ns"], type=pa.int32()),
-                pa.array(cols["sibling_index"], type=pa.int32()),
-                pa.array(cols["elem_sibling_index"], type=pa.int32()),
-                pa.array(cols["first_child"], type=pa.int32()),
-                pa.array(cols["next_sibling"], type=pa.int32()),
-                pa.array(cols["subtree_end"], type=pa.int32()),
-                pa.array(cols["text"], type=pa.string()),
-                pa.array(cols["attrs"], type=pa.map_(pa.string(), pa.string())),
-            ]
-            for n_ in text_names:
-                arrays.append(pa.array(cols[n_], type=pa.string()))
-            if match_text:
-                arrays.append(pa.array(cols["pseudo"], type=pa.int32()))
             yield pa.RecordBatch.from_arrays(
-                arrays, names=[f.name for f in schema.fields])
+                [pa.array(cols[n], type=at)
+                 for n, at in zip(schema.names, arrow_types)],
+                names=schema.names)
 
     return docs.mapInArrow(kernel, schema)
 
@@ -296,42 +291,10 @@ def extract_spans_from_bytes_df(docs: DataFrame, bytes_col: str = "content",
     DataUtil.load semantics (helper/DataUtil.kt:38-259). Pairs with
     spark.read.format("binaryFile") for raw crawl archives.
     """
-    from ..kernel.charset import decode_html_bytes
-
-    cols = [F.col(id_col).cast("string").alias("doc_id"),
-            F.col(bytes_col).alias("content")]
+    cols = {"content": bytes_col}
     if charset_col:
-        cols.append(F.col(charset_col).alias("charset"))
-    docs = docs.select(*cols)
-    has_hint = charset_col is not None
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        arrow_spans_type = pa.list_(
-            pa.struct(
-                [
-                    ("kind", pa.string()),
-                    ("text", pa.string()),
-                    ("media_ref", pa.string()),
-                    ("offset", pa.int32()),
-                ]
-            )
-        )
-        for batch in batches:
-            ids = batch.column(0)
-            payloads = batch.column(1).to_pylist()
-            hints = batch.column(2).to_pylist() if has_hint else [None] * len(payloads)
-            out = [
-                extract_spans_from_html(
-                    decode_html_bytes(b or b"", h) if b is not None else ""
-                )
-                for b, h in zip(payloads, hints)
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(out, type=arrow_spans_type)],
-                names=["doc_id", "spans"],
-            )
-
-    return docs.mapInArrow(kernel, SPANS_SCHEMA)
+        cols["charset"] = charset_col
+    return _map_docs(_docs_in(docs, id_col, **cols), _spans_of_bytes, SPANS_SCHEMA)
 
 
 SELECTED_SCHEMA = StructType(
@@ -353,41 +316,19 @@ def select_elements_df(docs: DataFrame, css: str, html_col: str = "html",
 
     The CSS query compiles once on the driver (validated eagerly) and again
     per executor from the broadcast closure's string (QueryParser caches).
+    The harness emits each document's matches as one array, which the JVM
+    explodes into rows.
     """
-    from ..kernel import selector as _sel
-    from ..kernel import textops as _tx
-    from ..kernel.treebuilder import parse as _p
+    from ..kernel import selector as sel
 
-    _sel.parse_query(css)  # validate on driver
-    docs = docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(html_col).alias("html"))
+    sel.parse_query(css)  # validate on driver
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        q = _sel.parse_query(css)
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            out = {k: [] for k in
-                   ("doc_id", "match_index", "tag", "text", "own_text", "attrs")}
-            for did, h in zip(ids, htmls):
-                d = _p(h or "")
-                for mi, node in enumerate(_sel.select(d, q)):
-                    out["doc_id"].append(did)
-                    out["match_index"].append(mi)
-                    out["tag"].append(d.tag[node])
-                    out["text"].append(_tx.element_text(d, node))
-                    out["own_text"].append(_tx.own_text(d, node))
-                    out["attrs"].append(d.attrs[node])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["doc_id"], type=pa.string()),
-                    pa.array(out["match_index"], type=pa.int32()),
-                    pa.array(out["tag"], type=pa.string()),
-                    pa.array(out["text"], type=pa.string()),
-                    pa.array(out["own_text"], type=pa.string()),
-                    pa.array(out["attrs"], type=pa.map_(pa.string(), pa.string())),
-                ],
-                names=["doc_id", "match_index", "tag", "text", "own_text", "attrs"],
-            )
+    def matches(html: str | None) -> list[tuple]:
+        d = _parse(html or "")
+        return [(mi, d.tag[n], tx.element_text(d, n), tx.own_text(d, n), d.attrs[n])
+                for mi, n in enumerate(sel.select(d, css))]
 
-    return docs.mapInArrow(kernel, SELECTED_SCHEMA)
+    schema = StructType([SELECTED_SCHEMA[0], StructField(
+        "matches", ArrayType(StructType(SELECTED_SCHEMA.fields[1:])))])
+    out = _map_docs(_docs_in(docs, id_col, html=html_col), matches, schema)
+    return out.select("doc_id", F.inline("matches"))

@@ -85,16 +85,19 @@ _MAGIC = {
     b"fLaC": ("flac", "audio"),
     b"BM": ("bmp", "image"),
     b"OggS": ("ogg", "audio"),
+    b"\x00\x00\x01\x00": ("ico", "image"),
     b"II*\x00": ("tiff", "image"),
     b"MM\x00*": ("tiff", "image"),
 }
 
 
 def _sniff(data: bytes) -> tuple[str, str]:
-    # container-specific probes before the generic prefixes: WEBP rides a
-    # RIFF header, ISO BMFF (mp4/mov/m4a) keys on 'ftyp' at offset 4
+    # container-specific probes before the generic prefixes: WEBP and AVI
+    # ride a RIFF header, ISO BMFF (mp4/mov/m4a) keys on 'ftyp' at offset 4
     if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
         return ("webp", "image")
+    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
+        return ("avi", "video")
     if data[4:8] == b"ftyp":
         return ("mp4", "video")
     for magic, fmt in _MAGIC.items():

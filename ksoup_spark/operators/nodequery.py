@@ -1411,8 +1411,3 @@ def _compile_eval(nodes: DataFrame, ev, text_cols: frozenset = frozenset()) -> D
             .dropDuplicates(["doc_id", "node_id"])
         )
     raise UnsupportedSelector(type(structural).__name__)
-
-
-def select_nodes(nodes: DataFrame, css: str) -> DataFrame:
-    """compile_selector + document-order output columns."""
-    return compile_selector(nodes, css).orderBy("doc_id", "node_id")

@@ -74,6 +74,15 @@ def test_query_vs_oracle(spark, duck, name):
     assert sm == om, f"{name}: value mismatch, first diffs: {mism[:3]}"
 
 
+def test_nodequery_has_releases_node_table(spark):
+    """The cached node table is unpersisted once the counts are computed:
+    Spark's cache manager is empty after the query's rows are collected."""
+    spark.catalog.clearCache()
+    rows = entrymod.q_nodequery_has(spark, SF_ORACLE_DIR).collect()
+    assert rows
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     rows = df.limit(50).collect()

@@ -6,6 +6,7 @@ import sys
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -397,6 +398,22 @@ def test_multimodal_malformed_headers_fall_back():
         assert _decode_payload(corrupt)["format"] is not None
 
 
+def test_multimodal_sniff_truncated_ico_and_avi():
+    """Headers too short to decode still sniff to their container type:
+    ICO's reserved/type words, and RIFF+'AVI ' ahead of the generic RIFF."""
+    from ksoup_spark.operators.multimodal import _decode_payload, _sniff
+
+    ico = b"\x00\x00\x01\x00\x01\x00"
+    avi = b"RIFF\x00\x10\x00\x00AVI LIST"
+    assert _sniff(ico) == ("ico", "image")
+    assert _sniff(avi) == ("avi", "video")
+    assert _sniff(b"RIFF\x00\x10\x00\x00WAVEfmt ") == ("riff", "audio")
+    assert (_decode_payload(ico)["format"], _decode_payload(ico)["kind"]) == \
+        ("ico", "image")
+    assert (_decode_payload(avi)["format"], _decode_payload(avi)["kind"]) == \
+        ("avi", "video")
+
+
 def test_extract_handles_malformed_and_empty(spark):
     df = spark.createDataFrame(
         [("a", "<p"), ("b", ""), ("c", None), ("d", "<table><tr>x")],
@@ -404,6 +421,48 @@ def test_extract_handles_malformed_and_empty(spark):
     )
     out = extract.extract_spans_from_html_df(df).collect()
     assert len(out) == 4  # no crash on adversarial input
+
+
+@pytest.fixture(scope="module")
+def span_docs(spark):
+    """Corpus docs plus a null and an empty one, in the four input shapes
+    the span entry points read, and the kernel's spans for each."""
+    rows = [(r.doc_id, [sp.asDict() for sp in r.spans]) for r in
+            build_docs_table(spark, SF_DIR).select("doc_id", "spans")
+            .limit(12).collect()]
+    rows += [("null", None), ("empty", [])]
+    html = {d: None if sp is None else extract.assemble_html(sp)
+            for d, sp in rows}
+    df = spark.createDataFrame(
+        [(d, sp, html[d], None if html[d] is None else bytearray(html[d].encode()))
+         for d, sp in rows],
+        StructType(extract.SPANS_SCHEMA.fields
+                   + [StructField("html", StringType()),
+                      StructField("content", BinaryType())]))
+    expected = {d: extract.extract_spans_from_html(h or "")
+                for d, h in html.items()}
+    return df, expected
+
+
+_SPAN_ENTRY_POINTS = {
+    "extract_spans_df": extract.extract_spans_df,
+    "extract_spans_from_html_df": extract.extract_spans_from_html_df,
+    "extract_spans_from_bytes_df": extract.extract_spans_from_bytes_df,
+    "extract_spans_col": lambda df: df.select(
+        "doc_id", streaming.extract_spans_col()("spans").alias("spans")),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_SPAN_ENTRY_POINTS))
+def test_span_entry_points_agree(span_docs, entry):
+    """Every span entry point runs the same per-document harness: the same
+    documents give the same span lists, and null is the empty document."""
+    df, expected = span_docs
+    got = {r.doc_id: [sp.asDict() for sp in r.spans]
+           for r in _SPAN_ENTRY_POINTS[entry](df).collect()}
+    assert got == expected
+    assert got["null"] == got["empty"] == []
+    assert sum(len(v) for v in got.values()) > 12
 
 
 def test_giant_doc_skew(spark):
@@ -723,6 +782,24 @@ def test_pii_scrub_redacts_and_counts(spark):
         "reach [EMAIL] at [IP] or [PHONE] today"
     assert (out[2].n_emails, out[2].n_ips, out[2].n_phones) == (0, 0, 0)
     assert out[2].clean_text == "no pii here just v1.2.3 and the number 42"
+
+
+def test_pii_scrub_sql_escapes_quotes(monkeypatch):
+    """A pattern holding a single quote stays one SQL string literal in the
+    DuckDB twin (quotes doubled) and still matches."""
+    import duckdb
+
+    from ksoup_spark.operators import textstats
+
+    em = r"[A-Za-z0-9._%+'-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
+    monkeypatch.setattr(textstats, "PII_PATTERNS",
+                        [("email", em, "[EMAIL]")] + textstats.PII_PATTERNS[1:])
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents AS SELECT 1 AS doc_id, "
+                "'mail o''brien@mail.example.org now' AS text")
+    row = con.execute(textstats.pii_scrub_sql()).fetchone()
+    con.close()
+    assert row == (1, 1, 0, 0, "mail [EMAIL] now")
 
 
 def test_gopher_quality_flags(spark):
