@@ -751,17 +751,21 @@ def q_dedup_clusters(spark, sf_dir):
 
 
 def q_minhash_signatures(spark, sf_dir):
-    """Oracle-checked MinHash signatures (md5 hash family, portable SQL)."""
-    return dedup.minhash_signatures_md5(_docs(spark, sf_dir), num_hashes=8)
+    """MinHash signatures from dedup.minhash_signatures with hash="md5"
+    (the family DuckDB reproduces), one h{i} column per signature slot."""
+    sig = dedup.minhash_signatures(_docs(spark, sf_dir), num_hashes=8,
+                                   hash="md5")
+    return sig.select("doc_id",
+                      *[F.col("signature")[i].alias(f"h{i}") for i in range(8)])
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
-    """Banded MinHash-LSH candidate pairs, md5 hash family: the full LSH
-    path (banding, bucket join, agreement estimate) is value-hash-checked
-    against a DuckDB twin. The xxhash64 production variant
-    (dedup.minhash_lsh_pairs) shares the identical plan shape."""
-    return dedup.minhash_lsh_pairs_md5(_docs(spark, sf_dir), num_hashes=8,
-                                       bands=4, threshold=0.25)
+    """Banded MinHash-LSH candidate pairs: dedup.minhash_lsh_pairs, the
+    plan the bench times, run with hash="md5" so the whole LSH path
+    (banding, bucket join, agreement estimate) is value-checked against a
+    DuckDB twin."""
+    return dedup.minhash_lsh_pairs(_docs(spark, sf_dir), num_hashes=8,
+                                   bands=4, threshold=0.25, hash="md5")
 
 
 def q_gopher_quality(spark, sf_dir):

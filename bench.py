@@ -217,10 +217,9 @@ def _single_doc_anchor() -> dict | None:
 
 
 def _q_minhash_lsh_prod(spark, sf_dir):
-    """Production MinHash-LSH path (xxhash64 family) — benched instead of
-    the md5-family oracle twin in queries() so per-round timings stay
-    comparable (same hash family as round 1) and measure the hash the 100 TB
-    job would actually run."""
+    """dedup.minhash_lsh_pairs with the default xxhash64 family at 32
+    hashes / 8 bands — the same plan queries() oracle-checks with
+    hash="md5" at 8 / 4, timed with the hash the 100 TB job runs."""
     from ksoup_spark.operators import dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -61,10 +61,6 @@ FORM_SUBMIT = frozenset(
 KNOWN_TAGS = BLOCK_TAGS | INLINE_TAGS
 
 
-def is_block(name: str) -> bool:
-    return name in BLOCK_TAGS
-
-
 def format_as_block(name: str) -> bool:
     # Element.text() tail rule uses tag.formatAsBlock (Element.kt:1339-1349):
     # block tags that are NOT in the format-as-inline list.

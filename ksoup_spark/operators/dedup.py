@@ -10,15 +10,22 @@ Scale notes (the point of each design):
   shingle -> count per pair -> |A∩B| / (|A|+|B|-|A∩B|)). Avoids the O(n²)
   cross join; hot shingles are the skew risk, so shingles above a document-
   frequency cap are dropped (standard df-cut) before the join.
-- minhash_lsh: k permutations via seeded xxhash64, banded into b buckets;
+- minhash_lsh: k salted hashes per shingle, banded into b buckets;
   candidate pairs only join within a bucket. This is the 100 TB path — the
-  shuffle key is (band, bucket-hash), cardinality controlled by b.
+  shuffle key is (band, bucket-hash), cardinality controlled by b. One
+  plan, two hash families via ``hash=``: xxhash64 (JVM-native, the
+  production default) and md5 (60-bit, reproducible in DuckDB — the
+  oracle-checked family). Only the per-shingle hash differs.
+- simhash_near_dups: the same banded self-join (_band_pairs) over 15-bit
+  fingerprint chunks, verified by hamming distance.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .sampling import _hashed
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -47,16 +54,23 @@ def _word_grams(words_col, n: int):
     )
 
 
-def shingles(df: DataFrame, n: int = 3, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
-    """Distinct word n-gram shingles per document (md5-hashed)."""
+def _raw_shingles(df: DataFrame, n: int = 3, text_col: str = "text",
+                  id_col: str = "doc_id") -> DataFrame:
+    """Distinct raw word n-gram shingles per document (not hashed)."""
     wdf = df.select(F.col(id_col).alias("doc_id"),
                     F.split(F.col(text_col), " ").alias("_w"))
     sh = _word_grams(F.col("_w"), n)
     return wdf.select(
         "doc_id",
         F.explode(F.array_distinct(sh)).alias("shingle"),
-    ).select("doc_id", F.md5("shingle").alias("shingle"))
+    )
+
+
+def shingles(df: DataFrame, n: int = 3, text_col: str = "text",
+             id_col: str = "doc_id") -> DataFrame:
+    """Distinct word n-gram shingles per document (md5-hashed)."""
+    return _raw_shingles(df, n, text_col, id_col) \
+        .select("doc_id", F.md5("shingle").alias("shingle"))
 
 
 def jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
@@ -257,81 +271,71 @@ def jaccard_hot_shingles(df: DataFrame, n: int = 3,
     )
 
 
-def minhash_signatures(df: DataFrame, num_hashes: int = 32, n: int = 3) -> DataFrame:
-    """k minhash values per doc via seeded xxhash64 over shingles."""
-    sh = shingles(df, n)
-    seeds = list(range(num_hashes))
-    mins = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(s))).alias(f"h{s}") for s in seeds
-    ]
-    sig = sh.groupBy("doc_id").agg(*mins)
-    return sig.select(
-        "doc_id", F.array(*[F.col(f"h{s}") for s in seeds]).alias("signature")
-    )
+def minhash_signatures(df: DataFrame, num_hashes: int = 32, n: int = 3,
+                       hash: str = "xxhash64") -> DataFrame:
+    """(doc_id, signature): k minhash values per doc, hash i being the
+    ``hash`` family ("xxhash64" or "md5", as in sampling.corpus_split)
+    salted with "s{i}:" over each raw shingle."""
+    mins = [F.min(_hashed(F.col("shingle"), f"s{i}:", hash))
+            for i in range(num_hashes)]
+    return _raw_shingles(df, n).groupBy("doc_id").agg(
+        F.array(*mins).alias("signature"))
 
 
-def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 32, bands: int = 8,
-                      n: int = 3, threshold: float | None = None) -> DataFrame:
-    """LSH candidate pairs: band the signature, bucket-join within bands.
-
-    With threshold set, candidates are verified with exact Jaccard on
-    minhash estimate (fraction of equal signature positions).
-    """
-    rows = num_hashes // bands
-    sig = minhash_signatures(df, num_hashes, n)
-    banded = sig.select(
-        "doc_id",
-        "signature",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col("signature")[b * rows + r].cast("string")
-                                    for r in range(rows)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "signature", "bb.band", "bb.bucket")
+def _band_pairs(df: DataFrame, keys: list, carry: str) -> DataFrame:
+    """Banded self-join: explode one (band, key) row per entry of ``keys``,
+    join rows sharing a (band, key) with a.doc_id < b.doc_id, and keep each
+    (doc_a, doc_b) once, with ``carry`` from each side as
+    ``{carry}_a``/``{carry}_b``."""
+    bands = F.array(*[F.struct(F.lit(b).alias("band"), k.alias("key"))
+                      for b, k in enumerate(keys)])
+    banded = df.select("doc_id", carry, F.explode(bands).alias("bb")) \
+        .select("doc_id", carry, "bb.band", "bb.key")
     a = banded.alias("a")
-    b_ = banded.alias("b")
-    cand = (
+    b = banded.alias("b")
+    return (
         a.join(
-            b_,
+            b,
             (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.key") == F.col("b.key"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            F.col("a.signature").alias("sig_a"),
-            F.col("b.signature").alias("sig_b"),
+            F.col(f"a.{carry}").alias(f"{carry}_a"),
+            F.col(f"b.{carry}").alias(f"{carry}_b"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    est = cand.withColumn(
-        "est_jaccard",
-        F.round(
-            F.size(
-                F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                    lambda eq: eq,
-                )
-            )
-            / F.lit(num_hashes),
-            4,
-        ),
-    ).select("doc_a", "doc_b", "est_jaccard")
+
+
+def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 32, bands: int = 8,
+                      n: int = 3, threshold: float | None = None,
+                      hash: str = "xxhash64") -> DataFrame:
+    """Banded MinHash-LSH candidate pairs: (doc_a, doc_b, est_jaccard)
+    with doc_a < doc_b.
+
+    Each band's bucket key is xxhash64 of its comma-joined signature
+    values (8 bytes, whatever the family; the DuckDB twin
+    minhash_lsh_pairs_md5_sql joins on the exact string, the same candidate
+    set barring a 64-bit collision). est_jaccard is the fraction of equal
+    signature positions, rounded to 4; threshold, if set, filters on it.
+    """
+    rows = num_hashes // bands
+    sig = minhash_signatures(df, num_hashes, n, hash)
+    keys = [
+        F.xxhash64(F.concat_ws(",", *[
+            F.col("signature")[b * rows + r].cast("string")
+            for r in range(rows)]))
+        for b in range(bands)
+    ]
+    agree = F.size(F.filter(
+        F.zip_with("signature_a", "signature_b", lambda x, y: x == y),
+        lambda eq: eq))
+    est = _band_pairs(sig, keys, "signature").select(
+        "doc_a", "doc_b",
+        F.round(agree / F.lit(num_hashes), 4).alias("est_jaccard"))
     if threshold is not None:
         est = est.filter(F.col("est_jaccard") >= threshold)
     return est
@@ -342,47 +346,18 @@ def simhash_near_dups(simhash_df: DataFrame, band_bits: int = 15,
     """SimHash near-dup pairs: band fingerprint into total/band chunks
     (pigeonhole: hamming<=k pairs share >=1 of k+1 bands), join per band,
     verify hamming distance."""
-    n_bands = total_bits // band_bits
-    banded = simhash_df.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("simhash"), b * band_bits)
-                        .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        .alias("chunk"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "simhash", "bb.band", "bb.chunk")
-    a = banded.alias("a")
-    b_ = banded.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("h_a"),
-            F.col("b.simhash").alias("h_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    chunks = [
+        F.shiftright(F.col("simhash"), b * band_bits)
+        .bitwiseAND(F.lit((1 << band_bits) - 1))
+        for b in range(total_bits // band_bits)
+    ]
     hamming = F.expr(
         f"size(filter(transform(sequence(0, {total_bits - 1}), "
-        "i -> (shiftright(h_a ^ h_b, i) & 1) = 1), x -> x))"
+        "i -> (shiftright(simhash_a ^ simhash_b, i) & 1) = 1), x -> x))"
     )
     return (
-        cand.withColumn("hamming", hamming)
+        _band_pairs(simhash_df, chunks, "simhash")
+        .withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
@@ -433,15 +408,20 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 13,
     )
 
 
+def _shingles_sql(n: int) -> str:
+    """DuckDB list of a row's distinct raw word n-grams (the SQL form of
+    _raw_shingles)."""
+    return f"""list_distinct(list_transform(
+           generate_series(1, greatest(len(string_split(text,' ')) - {n - 1}, 1)),
+           i -> array_to_string(list_slice(string_split(text,' '), i, i + {n - 1}), ' ')
+         ))"""
+
+
 def decontaminate_sql(table: str = "documents", bench_filter: str = "",
                       n: int = 13, threshold: float = 0.05) -> str:
     """DuckDB oracle twin of decontaminate; ``bench_filter`` is a WHERE
     predicate selecting the benchmark rows out of the same table."""
-    grams = f"""
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(string_split(text,' ')) - {n - 1}, 1)),
-           i -> array_to_string(list_slice(string_split(text,' '), i, i + {n - 1}), ' ')
-         ))"""
+    grams = _shingles_sql(n)
     return f"""
 WITH doc_sh AS (
   SELECT doc_id, unnest({grams}) AS shingle FROM {table}
@@ -480,33 +460,12 @@ def jaccard_pairs_sql(table: str = "documents", n: int = 3,
     distinct shingles, mirroring the Spark path's semantics exactly —
     the df-cut drops shingles with document frequency > df_cut from the
     INTERSECTION while denominators keep the full (pre-cut) shingle
-    counts. df_cut=None reproduces the uncut all-pairs form."""
-    if df_cut is None:
-        return f"""
-WITH sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(string_split(text,' ')) - {n - 1}, 1)),
-           i -> array_to_string(list_slice(string_split(text,' '), i, i + {n - 1}), ' ')
-         )) AS shingles
-  FROM {table}
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       round(len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-             (len(a.shingles) + len(b.shingles)
-              - len(list_intersect(a.shingles, b.shingles))), 4) AS jaccard
-FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-      (len(a.shingles) + len(b.shingles)
-       - len(list_intersect(a.shingles, b.shingles))) >= {threshold}
-"""
+    counts. df_cut=None keeps every shingle."""
+    cut = "" if df_cut is None else f"""WHERE ex.shingle NOT IN (
+    SELECT shingle FROM ex GROUP BY shingle HAVING count(*) > {df_cut})"""
     return f"""
 WITH sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(string_split(text,' ')) - {n - 1}, 1)),
-           i -> array_to_string(list_slice(string_split(text,' '), i, i + {n - 1}), ' ')
-         )) AS shingles
+  SELECT doc_id, {_shingles_sql(n)} AS shingles
   FROM {table}
 ),
 sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
@@ -514,8 +473,7 @@ ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
 kept AS (
   SELECT ex.doc_id, ex.shingle
   FROM ex
-  WHERE ex.shingle NOT IN (
-    SELECT shingle FROM ex GROUP BY shingle HAVING count(*) > {df_cut})
+  {cut}
 ),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
@@ -531,108 +489,11 @@ WHERE i.n_common::DOUBLE / (sa.sz + sb.sz - i.n_common) >= {threshold}
 """
 
 
-def minhash_signatures_md5(df: DataFrame, num_hashes: int = 8,
-                           n: int = 3) -> DataFrame:
-    """MinHash signatures using md5-derived 60-bit hashes — portable to any
-    SQL engine for oracle checking. Production path uses
-    minhash_signatures (xxhash64: JVM-native, ~4× faster); the math is
-    identical, only the hash family differs.
-    """
-    sh = shingles_raw(df, n)
-    mins = [
-        F.min(
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"s{s}:"), F.col("shingle"))),
-                            1, 15),
-                16, 10,
-            ).cast("long")
-        ).alias(f"h{s}")
-        for s in range(num_hashes)
-    ]
-    return sh.groupBy("doc_id").agg(*mins)
-
-
-def shingles_raw(df: DataFrame, n: int = 3, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
-    """Distinct raw word n-gram shingles per document (not hashed)."""
-    wdf = df.select(F.col(id_col).alias("doc_id"),
-                    F.split(F.col(text_col), " ").alias("_w"))
-    sh = _word_grams(F.col("_w"), n)
-    return wdf.select(
-        "doc_id",
-        F.explode(F.array_distinct(sh)).alias("shingle"),
-    )
-
-
-def minhash_lsh_pairs_md5(df: DataFrame, num_hashes: int = 8, bands: int = 4,
-                          n: int = 3, threshold: float | None = None
-                          ) -> DataFrame:
-    """Banded MinHash-LSH candidate pairs over the md5 hash family —
-    deterministic and portable, so the WHOLE LSH path (banding, bucket
-    join, signature-agreement estimate) is oracle-checkable in any SQL
-    engine, not just the signature stage.
-
-    Bucket key = the concatenated band values themselves (exact string
-    join): at 100 TB you'd hash the key down to 8 bytes (xxhash64, see
-    minhash_lsh_pairs) — the join cardinality and shuffle shape are
-    identical, only the key width differs.
-
-    Returns (doc_a, doc_b, est_jaccard) with doc_a < doc_b; est_jaccard =
-    fraction of equal signature positions, rounded to 4.
-    """
-    rows = num_hashes // bands
-    hcols = [f"h{s}" for s in range(num_hashes)]
-    sig = minhash_signatures_md5(df, num_hashes, n)
-    banded = sig.select(
-        "doc_id",
-        *hcols,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        ",",
-                        *[F.col(f"h{b * rows + r}").cast("string")
-                          for r in range(rows)],
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bb"),
-    ).select("doc_id", *hcols, "bb.band", "bb.bucket")
-    a = banded.alias("a")
-    b_ = banded.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            *[F.col(f"a.{h}").alias(f"a_{h}") for h in hcols],
-            *[F.col(f"b.{h}").alias(f"b_{h}") for h in hcols],
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    eq = sum((F.col(f"a_h{s}") == F.col(f"b_h{s}")).cast("int")
-             for s in range(num_hashes))
-    est = cand.select(
-        "doc_a", "doc_b",
-        F.round(eq / F.lit(float(num_hashes)), 4).alias("est_jaccard"),
-    )
-    if threshold is not None:
-        est = est.filter(F.col("est_jaccard") >= threshold)
-    return est
-
-
 def minhash_lsh_pairs_md5_sql(table: str = "documents", num_hashes: int = 8,
                               bands: int = 4, n: int = 3,
                               threshold: float | None = None) -> str:
-    """DuckDB oracle twin of minhash_lsh_pairs_md5 (same banding, same
-    bucket-key construction, same agreement estimate)."""
+    """DuckDB oracle twin of minhash_lsh_pairs(hash="md5"): same banding,
+    same agreement estimate; the bucket key is the exact band string."""
     rows = num_hashes // bands
     band_cases = " ".join(
         "WHEN {b} THEN {expr}".format(
@@ -673,10 +534,7 @@ def minhash_signatures_md5_sql(table: str = "documents", num_hashes: int = 8,
     )
     return f"""
 WITH sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, greatest(len(string_split(text,' ')) - {n - 1}, 1)),
-           i -> array_to_string(list_slice(string_split(text,' '), i, i + {n - 1}), ' ')
-         ))) AS shingle
+  SELECT doc_id, unnest({_shingles_sql(n)}) AS shingle
   FROM {table}
 )
 SELECT doc_id, {cols} FROM sh GROUP BY doc_id

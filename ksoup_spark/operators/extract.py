@@ -88,10 +88,6 @@ NODE_TABLE_SCHEMA = StructType(
     ]
 )
 
-NODE_TABLE_TEXT_SCHEMA = StructType(
-    NODE_TABLE_SCHEMA.fields + [StructField("elem_text", StringType())]
-)
-
 _MEDIA_TAG = {"image": "img", "video": "video", "object": "object"}
 
 

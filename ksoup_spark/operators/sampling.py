@@ -5,8 +5,8 @@ stable across reruns, cluster sizes, and partitionings — so it is computed
 from a content-independent hash of the id, never from randomness or row
 order. Pure per-row JVM expressions: no shuffle, no Python, scale-free.
 
-Two hash families, same shape as the MinHash pair
-(operators/dedup.py minhash_signatures vs minhash_signatures_md5):
+One plan, two hash families behind ``hash=`` (``_hashed`` below; the
+MinHash operators in operators/dedup.py take the same switch):
 
 - ``hash="xxhash64"`` (default): the production path — JVM-native,
   fastest.
@@ -19,23 +19,24 @@ on the split column and Catalyst pushes the predicate into the scan.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _BUCKETS = 1_000_000  # ppm resolution for split fractions
 
 
-def _bucket(id_col: str, hash: str, seed: str):
-    sid = F.col(id_col).cast("string")
+def _hashed(col, salt: str, hash: str):
+    """Salted bigint hash of a string column in the chosen family.
+
+    ``"md5"`` keeps the first 60 bits of md5(salt || col) as a decimal —
+    expressible verbatim in DuckDB (conv == from-hex)."""
     if hash == "xxhash64":
-        return F.pmod(F.xxhash64(sid, F.lit(seed)), F.lit(_BUCKETS))
+        return F.xxhash64(col, F.lit(salt))
     if hash == "md5":
-        # first 60 bits of md5(seed || id) as a decimal, mod buckets —
-        # expressible verbatim in DuckDB (conv == from-hex)
-        return F.pmod(
-            F.conv(F.substring(F.md5(F.concat(F.lit(seed), sid)), 1, 15),
-                   16, 10).cast("long"),
-            F.lit(_BUCKETS))
+        return F.conv(F.substring(F.md5(F.concat(F.lit(salt), col)), 1, 15),
+                      16, 10).cast("long")
     raise ValueError(f"unknown hash family: {hash}")
 
 
@@ -44,8 +45,9 @@ def corpus_split(df: DataFrame, weights: dict[str, float] | None = None,
                  hash: str = "xxhash64") -> DataFrame:
     """Assign each row a deterministic split label by hashed-id bucket.
 
-    ``weights`` maps label -> fraction (must sum to <= 1; any remainder
-    falls to the LAST label). Insertion order defines the bucket ranges,
+    ``weights`` maps label -> fraction (must sum to <= 1; the LAST label
+    gets the remainder, with a UserWarning when that differs from its
+    declared weight). Insertion order defines the bucket ranges,
     so the same weights dict always yields the same assignment; changing
     ``seed`` re-deals every document. Returns the input columns plus
     ``split``.
@@ -55,10 +57,17 @@ def corpus_split(df: DataFrame, weights: dict[str, float] | None = None,
     if not weights or any(w < 0 for w in weights.values()) \
             or sum(weights.values()) > 1.0 + 1e-9:
         raise ValueError("weights must be non-negative and sum to <= 1")
-    bucket = _bucket(id_col, hash, seed)
+    bucket = F.pmod(_hashed(F.col(id_col).cast("string"), seed, hash),
+                    F.lit(_BUCKETS))
+    labels = list(weights)
+    rest = 1.0 - sum(weights[label] for label in labels[:-1])
+    if abs(rest - weights[labels[-1]]) > 1e-9:
+        warnings.warn(
+            f"corpus_split: last label {labels[-1]!r} declares weight "
+            f"{weights[labels[-1]]} but gets the remainder {rest:.6g}",
+            UserWarning, stacklevel=2)
     expr = None
     hi = 0
-    labels = list(weights)
     for label in labels[:-1]:
         hi += int(round(weights[label] * _BUCKETS))
         cond = bucket < hi

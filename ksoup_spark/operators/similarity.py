@@ -32,6 +32,23 @@ def _norm(a):
     )
 
 
+def _cosine(a, b):
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, neighbor_id) for the k best ``sim`` rows per query
+    of ``scored``, ties broken by neighbor id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id")
+    )
+
+
 def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 3,
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Brute-force cosine top-k: (query_id, rank, neighbor_id).
@@ -45,17 +62,9 @@ def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 3,
     joined = F.broadcast(q).crossJoin(c).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    sim = (_dot(F.col("qv"), F.col("cv"))
-           / (_norm(F.col("qv")) * _norm(F.col("cv"))))
-    scored = joined.select("query_id", "neighbor_id", sim.alias("sim"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    sim = _cosine(F.col("qv"), F.col("cv"))
+    return _rank_topk(
+        joined.select("query_id", "neighbor_id", sim.alias("sim")), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -115,17 +124,9 @@ def lsh_ann(emb: DataFrame, dim: int, query_ids: list[int], k: int = 3,
     joined = F.broadcast(q).join(c, F.col("qb") == F.col("cb")).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    sim = (_dot(F.col("qv"), F.col("cv"))
-           / (_norm(F.col("qv")) * _norm(F.col("cv"))))
-    scored = joined.select("query_id", "neighbor_id", sim.alias("sim"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    sim = _cosine(F.col("qv"), F.col("cv"))
+    return _rank_topk(
+        joined.select("query_id", "neighbor_id", sim.alias("sim")), k)
 
 
 def _plane_sql_literal(plane: list[float]) -> str:
@@ -329,7 +330,7 @@ def cosine_near_dups(emb: DataFrame, threshold: float = 0.95,
             .repartition(par)
         b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
         joined = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    sim = _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
+    sim = _cosine(F.col("va"), F.col("vb"))
     return (
         joined.select("id_a", "id_b", sim.alias("sim"))
         .filter(F.col("sim") >= threshold)
@@ -392,18 +393,22 @@ def ivf_train_centroids(emb: DataFrame, n_centroids: int = 8, iters: int = 3,
     return centroids
 
 
+def _centroid_sims(v, centroids: list[list[float]]):
+    """array<struct<s: cosine(v, centroid i), i>> over the centroids."""
+    return F.array(*[
+        F.struct(_cosine(v, F.array(*[F.lit(x) for x in c])).alias("s"),
+                 F.lit(i).alias("i"))
+        for i, c in enumerate(centroids)
+    ])
+
+
 def ivf_assign(emb: DataFrame, centroids: list[list[float]],
                id_col: str = "vec_id", vec_col: str = "embedding"
                ) -> DataFrame:
     """Nearest-centroid (by cosine) id per vector — pure JVM expressions:
     argmax via array_max over (sim, idx) structs."""
     v = F.col(vec_col)
-    cands = []
-    for i, c in enumerate(centroids):
-        carr = F.array(*[F.lit(x) for x in c])
-        sim = _dot(v, carr) / (_norm(v) * _norm(carr))
-        cands.append(F.struct(sim.alias("s"), F.lit(i).alias("i")))
-    best = F.array_max(F.array(*cands))["i"]
+    best = F.array_max(_centroid_sims(v, centroids))["i"]
     return emb.select(F.col(id_col).alias("vec_id"),
                       v.alias(vec_col),
                       best.alias("centroid"))
@@ -423,13 +428,8 @@ def ivf_ann(emb: DataFrame, query_ids: list[int], k: int = 3,
 
     # per-query probe list: top-nprobe centroids by cosine
     v = F.col(vec_col)
-    sims = []
-    for i, c in enumerate(centroids):
-        carr = F.array(*[F.lit(x) for x in c])
-        sims.append(F.struct(
-            (_dot(v, carr) / (_norm(v) * _norm(carr))).alias("s"),
-            F.lit(i).alias("i")))
-    probes = F.slice(F.reverse(F.array_sort(F.array(*sims))), 1, nprobe)
+    probes = F.slice(
+        F.reverse(F.array_sort(_centroid_sims(v, centroids))), 1, nprobe)
     q = (
         assigned.filter(F.col("vec_id").isin(query_ids))
         .select(F.col("vec_id").alias("query_id"),
@@ -443,15 +443,7 @@ def ivf_ann(emb: DataFrame, query_ids: list[int], k: int = 3,
     joined = F.broadcast(q).join(c, F.col("probe") == F.col("cb")).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    sim = (_dot(F.col("qv"), F.col("cv"))
-           / (_norm(F.col("qv")) * _norm(F.col("cv"))))
+    sim = _cosine(F.col("qv"), F.col("cv"))
     scored = joined.select("query_id", "neighbor_id", sim.alias("sim")) \
         .dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    return _rank_topk(scored, k)

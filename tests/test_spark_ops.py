@@ -765,6 +765,60 @@ def test_corpus_split_deterministic_and_proportional(spark):
         sampling.corpus_split(docs, {"a": 0.9, "b": 0.2})
 
 
+def test_corpus_split_warns_when_last_weight_is_not_the_remainder(spark):
+    """The last label gets the remainder; a declared weight that differs
+    from it is named in one UserWarning, and matching weights stay silent."""
+    import warnings
+
+    from ksoup_spark.operators import sampling
+
+    docs = spark.range(10).select(F.col("id").alias("doc_id"))
+    with pytest.warns(UserWarning, match=r"'test'.*0\.05.*remainder 0\.1"):
+        sampling.corpus_split(docs, {"train": 0.8, "val": 0.1, "test": 0.05})
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        sampling.corpus_split(docs)
+        sampling.corpus_split(docs, {"train": 0.8, "val": 0.1, "test": 0.1})
+
+
+@pytest.mark.parametrize("family", ["xxhash64", "md5"])
+def test_minhash_lsh_pairs_match_driver_banding(spark, family):
+    """minhash_lsh_pairs equals a driver-side banding of minhash_signatures'
+    own output: candidates share any band's values, est_jaccard is the
+    signature agreement rounded to 4 (exact here: k/16 has 4 decimals)."""
+    from ksoup_spark.operators import dedup, sampling
+
+    base = " ".join(f"w{i}" for i in range(40))
+    docs = spark.createDataFrame(
+        [(1, base), (2, base), (3, base + " tail"),
+         (4, " ".join(f"x{i}" for i in range(30))),
+         (5, " ".join(f"y{i}" for i in range(25)))],
+        "doc_id long, text string")
+    k, bands = 16, 8
+    rows = k // bands
+    sig = {r.doc_id: r.signature for r in
+           dedup.minhash_signatures(docs, k, hash=family).collect()}
+    want = {}
+    for a in sig:
+        for b in sig:
+            sa, sb = sig[a], sig[b]
+            if a < b and any(sa[i:i + rows] == sb[i:i + rows]
+                             for i in range(0, k, rows)):
+                agree = sum(x == y for x, y in zip(sa, sb))
+                want[(a, b)] = round(agree / k, 4)
+    rows_out = [((r.doc_a, r.doc_b), r.est_jaccard) for r in
+                dedup.minhash_lsh_pairs(docs, k, bands, hash=family).collect()]
+    got = dict(rows_out)
+    assert len(got) == len(rows_out)  # each pair once
+    assert got == want
+    assert got[(1, 2)] == 1.0
+    assert (1, 3) in got and (2, 3) in got  # the near-duplicate pair
+    with pytest.raises(ValueError):
+        dedup.minhash_signatures(docs, k, hash="sha1")
+    with pytest.raises(ValueError):
+        sampling.corpus_split(docs, hash="sha1")
+
+
 def test_pii_scrub_redacts_and_counts(spark):
     """Emails, IPv4s, and phone runs are replaced with typed tokens and
     counted on progressively scrubbed text (an email's digits never
