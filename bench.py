@@ -195,6 +195,17 @@ def _quick_anchor_ms(reps: int = 3) -> float | None:
     return ms
 
 
+def _contention_gate() -> str:
+    """"on" when the anchor page is readable. Without it every scaling round
+    is accepted ungated, which is said once on stderr and in the JSON."""
+    if os.path.exists(_ANCHOR_PAGE):
+        return "on"
+    status = "off: anchor page missing"
+    print(f"bench.py: contention gate {status} ({_ANCHOR_PAGE}); every "
+          "scaling round is accepted without a gate", file=sys.stderr)
+    return status
+
+
 def _single_doc_anchor() -> dict | None:
     """Parse throughput on the reference's own benchmark page (the
     KsoupBenchmark 448KB page), single core — the direct anchor against
@@ -267,6 +278,7 @@ def main() -> None:
     # - best-of-accepted-rounds per level
     n_small = SCALE_N
     n_big = SCALE_N * 4
+    gate_status = _contention_gate()
 
     def _measure_level(n: int) -> float:
         s = get_spark(app=f"ksoup-scale-{n}", master=f"local[{n}]",
@@ -331,6 +343,7 @@ def main() -> None:
         "queries": timings,
         "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
         "n_docs": n_docs,
+        "contention_gate": gate_status,
         "docs_per_sec": round(n_docs / headline_dt, 1),
         "mb_per_sec": round(mb / headline_dt, 3),
         "scaling": {

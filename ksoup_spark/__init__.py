@@ -1,0 +1,3 @@
+from . import _zipcache
+
+_zipcache.install()

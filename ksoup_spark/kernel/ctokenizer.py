@@ -8,8 +8,9 @@ CPython's headers, cached under $KSOUP_CTOK_CACHE (default
 ~/.cache/ksoup-spark-ctok) keyed by a hash of the C source + entity table +
 interpreter tag, so executors that receive the package via --py-files each
 compile once per machine and share the cached .so afterwards. Anything
-missing (gcc, headers, write permissions) degrades silently to the pure
-Python tokenizer — correctness never depends on the C path.
+missing (gcc, headers, write permissions) falls back to the pure Python
+tokenizer — correctness never depends on the C path — with one
+RuntimeWarning per process; ``engine_status()`` returns the reason.
 
 Scope: the C path only serves untracked parses (no parse-error collection,
 no source-position tracking); tracked parses keep the Python tokenizer whose
@@ -31,6 +32,7 @@ import subprocess
 import sys
 import sysconfig
 import tempfile
+import warnings
 
 from .tokenizer import DATA, Tokenizer
 
@@ -39,6 +41,7 @@ _BATCH = 8192
 
 _c = None  # the loaded C module, or None
 _tried = False
+_reason: str | None = None  # why _c is None once _load() has run
 
 
 def _gen_entities_header() -> str:
@@ -148,14 +151,12 @@ def _source() -> str:
     return data.decode("utf-8")
 
 
-def _build() -> str | None:
-    """Compile (or reuse) the cached .so; returns its path or None."""
-    try:
-        src = _source()
-        ents = _gen_entities_header()
-        tagsh = _gen_tags_header()
-    except Exception:
-        return None
+def _build() -> str:
+    """Compile (or reuse) the cached .so and return its path; raises with
+    the reason when it cannot be built."""
+    src = _source()
+    ents = _gen_entities_header()
+    tagsh = _gen_tags_header()
     tag = sysconfig.get_config_var("SOABI") or sys.implementation.cache_tag
     key = hashlib.sha256(
         (src + ents + tagsh + str(tag)).encode("utf-8")).hexdigest()[:16]
@@ -165,29 +166,27 @@ def _build() -> str | None:
         return so_path
     include = sysconfig.get_paths()["include"]
     if not os.path.exists(os.path.join(include, "Python.h")):
-        return None
-    try:
-        os.makedirs(cache, exist_ok=True)
-        with tempfile.TemporaryDirectory(dir=cache) as tmp:
-            cpath = os.path.join(tmp, "ctok.c")
-            with open(os.path.join(tmp, "entities_gen.h"), "w") as f:
-                f.write(ents)
-            with open(os.path.join(tmp, "tags_gen.h"), "w") as f:
-                f.write(tagsh)
-            with open(cpath, "w") as f:
-                f.write(src)
-            out = os.path.join(tmp, "out.so")
-            r = subprocess.run(
-                ["gcc", "-O2", "-shared", "-fPIC", "-fno-strict-aliasing",
-                 f"-I{include}", cpath, "-o", out],
-                capture_output=True, text=True, timeout=120)
-            if r.returncode != 0:
-                return None
-            # atomic publish: concurrent builders race benignly
-            os.replace(out, so_path)
-        return so_path
-    except Exception:
-        return None
+        raise FileNotFoundError(f"Python.h not found under {include}")
+    os.makedirs(cache, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=cache) as tmp:
+        cpath = os.path.join(tmp, "ctok.c")
+        with open(os.path.join(tmp, "entities_gen.h"), "w") as f:
+            f.write(ents)
+        with open(os.path.join(tmp, "tags_gen.h"), "w") as f:
+            f.write(tagsh)
+        with open(cpath, "w") as f:
+            f.write(src)
+        out = os.path.join(tmp, "out.so")
+        r = subprocess.run(
+            ["gcc", "-O2", "-shared", "-fPIC", "-fno-strict-aliasing",
+             f"-I{include}", cpath, "-o", out],
+            capture_output=True, text=True, timeout=120)
+        if r.returncode != 0:
+            raise RuntimeError(
+                f"gcc exited {r.returncode}: {r.stderr.strip()[-300:]}")
+        # atomic publish: concurrent builders race benignly
+        os.replace(out, so_path)
+    return so_path
 
 
 def _intern_names() -> list:
@@ -210,24 +209,35 @@ def _intern_names() -> list:
 
 
 def _load():
-    global _c, _tried
+    global _c, _tried, _reason
     if _tried:
         return _c
     _tried = True
     if os.environ.get("KSOUP_SPARK_NO_CTOK") == "1":
-        return None
-    so = _build()
-    if not so:
+        _reason = "disabled by KSOUP_SPARK_NO_CTOK=1"
         return None
     try:
+        so = _build()
         spec = importlib.util.spec_from_file_location(_MODULE_NAME, so)
         mod = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(mod)
         mod.set_interns(_intern_names())
-        _c = mod
-    except Exception:
-        _c = None
+    except Exception as e:
+        # _tried makes this run, and warn, once per process
+        _reason = f"C build or load failed: {type(e).__name__}: {e}"
+        warnings.warn(f"ksoup_spark: {_reason}; the pure-Python tokenizer "
+                      "and tree builder run instead (about 5x slower)",
+                      RuntimeWarning, stacklevel=2)
+        return None
+    _c = mod
+    _reason = None
     return _c
+
+
+def engine_status() -> tuple[bool, str | None]:
+    """(loaded, reason): whether the C engine loaded in this process, and
+    why not when it did not."""
+    return _load() is not None, _reason
 
 
 _EOF = ("eof",)

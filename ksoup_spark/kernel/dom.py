@@ -57,14 +57,9 @@ def _c_to_table_ints():
     the semantics reference and the fallback."""
     global _C_TO_TABLE
     if _C_TO_TABLE is False:
-        try:
-            from .ctokenizer import _load
+        from .ctokenizer import _load
 
-            mod = _load()
-            _C_TO_TABLE = getattr(mod, "to_table_ints", None) \
-                if mod is not None else None
-        except Exception:
-            _C_TO_TABLE = None
+        _C_TO_TABLE = getattr(_load(), "to_table_ints", None)
     return _C_TO_TABLE
 
 

@@ -42,13 +42,9 @@ def _c_norm_ws():
     cached .so as the tokenizer), else None. Resolved once at import; the
     Python regex pair below stays the semantics reference and the fallback
     (lone-surrogate strings can't take the UTF-8 C path)."""
-    try:
-        from .ctokenizer import _load
+    from .ctokenizer import _load
 
-        mod = _load()
-        return getattr(mod, "norm_ws", None) if mod is not None else None
-    except Exception:
-        return None
+    return getattr(_load(), "norm_ws", None)
 
 
 _cnorm = _c_norm_ws()
@@ -56,13 +52,9 @@ _cnorm = _c_norm_ws()
 
 def _c_element_text():
     """The C element_text twin (same .so); None when unbuildable."""
-    try:
-        from .ctokenizer import _load
+    from .ctokenizer import _load
 
-        mod = _load()
-        return getattr(mod, "element_text", None) if mod is not None else None
-    except Exception:
-        return None
+    return getattr(_load(), "element_text", None)
 
 
 _ctext = _c_element_text()
@@ -339,13 +331,9 @@ def _c_extract_spans():
     """The C span extractor when the ctok module is buildable, else None.
     Same .so as the tokenizer; the Python DFS below stays the semantics
     reference and the fallback (lone-surrogate text can't view as UTF-8)."""
-    try:
-        from .ctokenizer import _load
+    from .ctokenizer import _load
 
-        mod = _load()
-        return getattr(mod, "extract_spans", None) if mod is not None else None
-    except Exception:
-        return None
+    return getattr(_load(), "extract_spans", None)
 
 
 _cspans = _c_extract_spans()

@@ -17,6 +17,7 @@ from __future__ import annotations
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -51,10 +52,16 @@ def with_part(docs: DataFrame, num_parts: int) -> DataFrame:
 
 
 def completed_parts(spark: SparkSession, metrics_path: str) -> DataFrame:
+    """Parts that have a metrics row. Only a metrics path that does not exist
+    yet reads as "nothing done". Any other failure to read the table raises,
+    here or at the first action: the metrics table is the commit record, and
+    reading a damaged or unreachable one as empty would rerun every part."""
     try:
         return spark.read.schema(METRICS_SCHEMA).parquet(metrics_path) \
             .select("part").distinct()
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return spark.createDataFrame([], "part long")
 
 

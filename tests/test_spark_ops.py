@@ -160,6 +160,31 @@ def test_pipeline_partial_resume(spark, tmp_path):
     assert spark.read.parquet(out).count() == docs.count()
 
 
+def test_completed_parts_absent_metrics_is_empty(spark, tmp_path):
+    done = pipeline.completed_parts(spark, str(tmp_path / "no-metrics-yet"))
+    assert done.columns == ["part"]
+    assert done.collect() == []
+
+
+def test_completed_parts_unreachable_metrics_raises(spark):
+    # e.g. a metrics URI whose filesystem connector is missing: reading it as
+    # "nothing done" would rerun and overwrite every part
+    with pytest.raises(Exception, match="nosuchfs"):
+        pipeline.completed_parts(spark, "nosuchfs://bucket/metrics")
+
+
+def test_pipeline_corrupt_metrics_raises_before_any_work(spark, tmp_path):
+    docs = build_docs_table(spark, SF_DIR).select("doc_id", "spans").limit(20)
+    out = tmp_path / "spans"
+    metrics = tmp_path / "metrics"
+    metrics.mkdir()
+    (metrics / "part-00000.parquet").write_bytes(b"not parquet" * 16)
+    with pytest.raises(Exception, match="part-00000.parquet"):
+        pipeline.run_extraction_pipeline(
+            spark, docs, str(out), str(metrics), num_parts=4, parts_per_batch=4)
+    assert not out.exists()
+
+
 def test_streaming_extraction(spark, tmp_path):
     docs = build_docs_table(spark, SF_DIR).select("doc_id", "spans").limit(50)
     src = str(tmp_path / "src")
