@@ -15,7 +15,6 @@ mode must not inherit the previous mode's workers):
            ``ksoup_spark._zipcache`` on the worker)
 
 Usage: python jobs/worker_task_probe.py [--master local[4]] [--reps 5]
-                                        [--modes jvm,plain,ksoup]
 Prints one JSON line per (mode, partitions), then one line of host facts.
 """
 
@@ -31,6 +30,7 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+MODES = ("jvm", "plain", "ksoup")
 PARTITIONS = (1, 4, 8, 16)
 _TICK = os.sysconf("SC_CLK_TCK")
 
@@ -107,7 +107,6 @@ def main(argv=None) -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--master", default="local[4]")
     ap.add_argument("--reps", type=int, default=5)
-    ap.add_argument("--modes", default="jvm,plain,ksoup")
     args = ap.parse_args(argv)
     # workers import ksoup_spark from this checkout
     os.environ["PYTHONPATH"] = os.pathsep.join(
@@ -115,7 +114,7 @@ def main(argv=None) -> None:
 
     from ksoup_spark.session import get_spark
 
-    for mode in args.modes.split(","):
+    for mode in MODES:
         spark = get_spark(app=f"worker-task-probe-{mode}", master=args.master,
                           shuffle_partitions=4)
         spark.sparkContext.setLogLevel("ERROR")
